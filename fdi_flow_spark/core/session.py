@@ -5,8 +5,18 @@ code is correct and fast on a 1000-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting),
 - Arrow on (every pandas-UDF operator pays one Arrow hop, not pickle),
-- explicit shuffle partitions as a *starting point* AQE can shrink,
+- shuffle partitions sized to the context's cores
+  (``sparkContext.defaultParallelism``): N on ``local[N]``, the registered
+  executor cores on a cluster. Every reduce task of a pandas-UDF stage is a
+  Python-worker round trip with a fixed cost, so more partitions than cores
+  only adds task waves. A stateful streaming query fixes its state-store
+  width to this value, and pays one state-store commit per partition on
+  every trigger,
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+A streaming checkpoint keeps the shuffle-partition count its query was
+first started with; restarting from an existing checkpoint ignores the
+session value. Start from a fresh checkpoint to pick up a new width.
 """
 
 from __future__ import annotations
@@ -22,13 +32,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    master = master or (f"local[{cpus}]" if cpus else "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -41,14 +50,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Scale-out guard (r14, guide §2.2): AQE's partition coalescing only
-    # SHRINKS the shuffle partition count — it never grows it above
-    # spark.sql.shuffle.partitions — so the local starting point of 32
-    # would cap reduce-side parallelism on a real cluster. Production sets
+    # Scale-out guard: AQE's partition coalescing only SHRINKS the shuffle
+    # partition count — it never grows it above spark.sql.shuffle.partitions
+    # — so the one-partition-per-core default caps reduce-side parallelism
+    # for the big batch shuffles, and on a cluster whose executors register
+    # after the session starts it is smaller still. Production sets
     # SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS (rule of thumb: ~2-4x total
     # executor cores, or input_bytes / 256 MB for the big shuffles) and AQE
-    # coalesces DOWN from there per stage; unset locally, nothing changes,
-    # keeping the driver's bench comparable across rounds.
+    # coalesces DOWN from there per stage. The knob leaves
+    # spark.sql.shuffle.partitions, and so the width of stateful streaming
+    # queries, alone.
     initial_parts = os.environ.get("SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS")
     if initial_parts:
         # validate at read time (r14 ADVICE): a non-integer value would
@@ -68,6 +79,15 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(n),
         )
-    for k, v in (extra_conf or {}).items():
+    conf = {"spark.sql.shuffle.partitions": str(shuffle_partitions)} if shuffle_partitions else {}
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        # Known only once the context is up; on a live session this
+        # resets the value, as the builder does with every other key.
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark

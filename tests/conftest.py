@@ -13,6 +13,27 @@ def spark() -> SparkSession:
     s.stop()
 
 
+# Runtime confs that ``get_spark`` resolves per call, so calling it on the
+# live test session would change them for every later test.
+SESSION_CONF_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+)
+
+
+@pytest.fixture()
+def restore_session_conf(spark):
+    """Put back the shared session's ``SESSION_CONF_KEYS`` after the test,
+    unsetting those that were unset before it."""
+    saved = {k: spark.conf.get(k, None) for k in SESSION_CONF_KEYS}
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
 def make_long(spark: SparkSession, series: dict[str, np.ndarray]):
     """Build a long-format (series_id, ts, value) frame from numpy arrays."""
     rows = []

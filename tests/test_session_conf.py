@@ -1,12 +1,26 @@
-"""r14 ADVICE: SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS must fail fast at
-read time with a clear error, not at first query with an opaque Spark
-conf error."""
+"""``get_spark`` conf resolution: SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS
+fails fast at read time with a clear error, not at first query with an
+opaque Spark conf error; and the shuffle-partition default follows the
+context's cores unless the caller names a value."""
 
 from __future__ import annotations
 
 import pytest
 
 from fdi_flow_spark.core.session import get_spark
+
+from .conftest import SESSION_CONF_KEYS
+
+# Every test here calls get_spark on the shared session, which re-applies
+# the builder conf to it.
+pytestmark = pytest.mark.usefixtures("restore_session_conf")
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture(scope="module", autouse=True)
+def conf_at_start(spark):
+    return {k: spark.conf.get(k, None) for k in SESSION_CONF_KEYS}
 
 
 @pytest.mark.parametrize("bad", ["abc", "-3", "0", "1.5"])
@@ -17,7 +31,25 @@ def test_initial_shuffle_partitions_validated(monkeypatch, bad, spark):
 
 
 def test_initial_shuffle_partitions_valid_passthrough(monkeypatch, spark):
-    # a valid value must not raise (the live session already exists, so
-    # the config is a no-op here — the wiring itself is one builder line)
     monkeypatch.setenv("SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS", "128")
-    assert get_spark(app_name="conf-check") is not None
+    s = get_spark(app_name="conf-check")
+    assert s.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "128"
+
+
+def test_shuffle_partitions_default_is_default_parallelism(monkeypatch, spark):
+    monkeypatch.delenv("SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS", raising=False)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != 7
+    spark.conf.set(SHUFFLE, "7")
+    assert get_spark().conf.get(SHUFFLE) == str(cores)
+
+
+def test_shuffle_partitions_explicit_wins(monkeypatch, spark):
+    monkeypatch.delenv("SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS", raising=False)
+    assert get_spark(shuffle_partitions=7).conf.get(SHUFFLE) == "7"
+    assert get_spark(extra_conf={SHUFFLE: "9"}).conf.get(SHUFFLE) == "9"
+
+
+def test_conf_restored_between_tests(spark, conf_at_start):
+    # runs after the tests above, each of which changed these confs
+    assert {k: spark.conf.get(k, None) for k in SESSION_CONF_KEYS} == conf_at_start

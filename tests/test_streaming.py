@@ -1451,3 +1451,35 @@ def test_streaming_kmeans_assign_equals_batch(spark):
         spark.catalog.dropTempView("kma_sink")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_streaming_cusum_state_width_is_default_parallelism(
+    spark, chunked_stream_dir, restore_session_conf
+):
+    """A stateful query fixes its state-store width to the shuffle-partition
+    count at start, and pays one state-store commit per partition on every
+    trigger; a session from a bare ``get_spark()`` sizes it to the cores."""
+    from fdi_flow_spark.core.session import get_spark
+    from fdi_flow_spark.streaming import streaming_cusum
+
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    s = get_spark()
+    d, _ = chunked_stream_dir
+    stream = s.readStream.schema(
+        "series_id string, ts long, value double, batch int"
+    ).parquet(d)
+    q = (
+        streaming_cusum(stream.select("series_id", "ts", "value"), k=0.2, h=1.5, target=0.5)
+        .writeStream.format("memory")
+        .queryName("cusum_width_sink")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        ops = q.lastProgress["stateOperators"]
+        assert ops[0]["numShufflePartitions"] == s.sparkContext.defaultParallelism
+    finally:
+        q.stop()
+        s.catalog.dropTempView("cusum_width_sink")
