@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark runner: executes the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-COMPACT (<1 KB) JSON line as the LAST line of stdout:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (local[*] when
+unset) and prints ONE COMPACT (<1 KB) JSON line as the LAST line of stdout:
 {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {10 headline names: sec}, "n_queries": N, "n_runs": N,
 "worst_ratio_vs_baseline": r, "worst_query": name,
@@ -465,7 +465,7 @@ def main() -> None:
     # whole recording under a different master — e.g. local-cluster[2,8,4096]
     # (two REAL executor JVMs: separate block stores, netty shuffle,
     # executor-side Python workers) to surface local-mode-only artifacts
-    # that local[32]'s single shared block store hides. Executor processes
+    # that local mode's single shared block store hides. Executor processes
     # do not inherit the driver's sys.path, hence the PYTHONPATH conf.
     bench_master = os.environ.get("SPARK_GRAFT_BENCH_MASTER")
     if bench_master:
@@ -936,7 +936,7 @@ def main() -> None:
     )
     spread_doc = {
         "source": source,
-        "master": bench_master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        "master": spark.sparkContext.master,
         "medians": timings,  # load-normalized (these feed the gate ratios)
         "medians_raw": timings_raw,
         "spread": spread,

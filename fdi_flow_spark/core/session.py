@@ -5,13 +5,13 @@ code is correct and fast on a 1000-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting),
 - Arrow on (every pandas-UDF operator pays one Arrow hop, not pickle),
-- shuffle partitions sized to the context's cores
-  (``sparkContext.defaultParallelism``): N on ``local[N]``, the registered
-  executor cores on a cluster. Every reduce task of a pandas-UDF stage is a
-  Python-worker round trip with a fixed cost, so more partitions than cores
-  only adds task waves. A stateful streaming query fixes its state-store
-  width to this value, and pays one state-store commit per partition on
-  every trigger,
+- shuffle partitions: one per core on a ``local[N]`` master
+  (``sparkContext.defaultParallelism``, exact there at start-up). A stateful
+  streaming query fixes its state-store width to this value and pays one
+  Python task and one state-store commit per partition on every trigger, so
+  extra partitions on few cores only add task waves to each trigger. On any
+  other master executors register after start-up and the core count is not
+  known yet, so the width is ``spark.default.parallelism`` if set, else 32,
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 
 A streaming checkpoint keeps the shuffle-partition count its query was
@@ -52,9 +52,9 @@ def get_spark(
     )
     # Scale-out guard: AQE's partition coalescing only SHRINKS the shuffle
     # partition count — it never grows it above spark.sql.shuffle.partitions
-    # — so the one-partition-per-core default caps reduce-side parallelism
-    # for the big batch shuffles, and on a cluster whose executors register
-    # after the session starts it is smaller still. Production sets
+    # — so the default width (one per local core; on a cluster
+    # spark.default.parallelism or 32) caps reduce-side parallelism for the
+    # big batch shuffles. Production sets
     # SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS (rule of thumb: ~2-4x total
     # executor cores, or input_bytes / 256 MB for the big shuffles) and AQE
     # coalesces DOWN from there per stage. The knob leaves
@@ -88,6 +88,17 @@ def get_spark(
         # Known only once the context is up; on a live session this
         # resets the value, as the builder does with every other key.
         spark.conf.set(
-            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+            "spark.sql.shuffle.partitions",
+            str(_default_shuffle_partitions(spark.sparkContext)),
         )
     return spark
+
+
+def _default_shuffle_partitions(sc) -> int:
+    """One partition per core on a ``local`` / ``local[...]`` master.
+    Elsewhere ``defaultParallelism`` counts only the executor cores
+    registered so far (at least 2), a start-up race, so use
+    ``spark.default.parallelism`` if set, else 32."""
+    if sc.master == "local" or sc.master.startswith("local["):
+        return sc.defaultParallelism
+    return int(sc.getConf().get("spark.default.parallelism", "32"))

@@ -83,9 +83,9 @@ def main() -> None:
         app_name="fdi_flow_spark-cluster-floor",
         master=MASTER,
         # Shuffle partitions sized for the x100 corpus (the library default
-        # 32 is the sf0.1 starting point; the repo-wide scale guidance is
-        # that partition count grows with data so each sort/agg task fits
-        # in executor memory — at x100 the 143M-row (id, h) shuffle at 32
+        # on a non-local master, 32, is the sf0.1 starting point; the
+        # repo-wide scale guidance is that partition count grows with data
+        # so each sort/agg task fits in executor memory — at x100 the 143M-row (id, h) shuffle at 32
         # partitions put ~4.5M rows in one window-sort task, a measured
         # executor heap OOM; at 256 each task holds ~0.5M rows. AQE
         # coalesces the excess at x1, so the x1 leg is not fragmented).

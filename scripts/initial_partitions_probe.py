@@ -6,7 +6,8 @@ Runs under a REAL multi-executor master (default local-cluster[2,8,4096])
 and executes a big-shuffle query twice in one session:
 
   off: spark.sql.adaptive.coalescePartitions.initialPartitionNum unset
-       -> the reduce side starts at spark.sql.shuffle.partitions (32)
+       -> the reduce side starts at spark.sql.shuffle.partitions (32,
+       the library default on a non-local master)
   on:  initialPartitionNum = $SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS
        (default 128 here) -> the reduce side starts there and AQE
        coalesces DOWN per stage

@@ -1,26 +1,20 @@
 """``get_spark`` conf resolution: SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS
 fails fast at read time with a clear error, not at first query with an
-opaque Spark conf error; and the shuffle-partition default follows the
-context's cores unless the caller names a value."""
+opaque Spark conf error; and the shuffle-partition default is one per core
+on a local master, a fixed width elsewhere, unless the caller names a
+value."""
 
 from __future__ import annotations
 
 import pytest
 
-from fdi_flow_spark.core.session import get_spark
-
-from .conftest import SESSION_CONF_KEYS
+from fdi_flow_spark.core.session import _default_shuffle_partitions, get_spark
 
 # Every test here calls get_spark on the shared session, which re-applies
 # the builder conf to it.
 pytestmark = pytest.mark.usefixtures("restore_session_conf")
 
 SHUFFLE = "spark.sql.shuffle.partitions"
-
-
-@pytest.fixture(scope="module", autouse=True)
-def conf_at_start(spark):
-    return {k: spark.conf.get(k, None) for k in SESSION_CONF_KEYS}
 
 
 @pytest.mark.parametrize("bad", ["abc", "-3", "0", "1.5"])
@@ -50,6 +44,29 @@ def test_shuffle_partitions_explicit_wins(monkeypatch, spark):
     assert get_spark(extra_conf={SHUFFLE: "9"}).conf.get(SHUFFLE) == "9"
 
 
-def test_conf_restored_between_tests(spark, conf_at_start):
-    # runs after the tests above, each of which changed these confs
-    assert {k: spark.conf.get(k, None) for k in SESSION_CONF_KEYS} == conf_at_start
+class _Context:
+    """The parts of a SparkContext that ``_default_shuffle_partitions`` reads."""
+
+    def __init__(self, master, default_parallelism, conf=None):
+        self.master = master
+        self.defaultParallelism = default_parallelism
+        self._conf = conf or {}
+
+    def getConf(self):
+        return self._conf
+
+
+@pytest.mark.parametrize(
+    "master, conf, expected",
+    [
+        ("local", {}, 3),
+        ("local[3]", {}, 3),
+        ("local[*]", {}, 3),
+        # executors still registering: defaultParallelism is a start-up race
+        ("local-cluster[2,8,4096]", {}, 32),
+        ("spark://host:7077", {}, 32),
+        ("yarn", {"spark.default.parallelism": "48"}, 48),
+    ],
+)
+def test_default_shuffle_partitions_by_master(master, conf, expected):
+    assert _default_shuffle_partitions(_Context(master, 3, conf)) == expected
